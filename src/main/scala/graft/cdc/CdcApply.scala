@@ -19,6 +19,20 @@ case class ApplyStats(
     txidWatermark: Long,
     bucketsTouched: Int)
 
+/** What a caller already learned about a batch in an O(batch) pass of
+  * its own, so [[CdcApply.applyBatch]] skips its pre-scan: the buckets
+  * the batch's keys hash to (key cast to the stored type — xxhash64 is
+  * type-directed), the batch's row count, and a lower bound on its
+  * `_txid`s (`Long.MinValue` when a `_txid` is null or unknown). */
+case class BatchHint(buckets: Seq[Int], count: Long, minTxid: Long)
+
+object BatchHint {
+  /** A row's input to `min` for [[BatchHint.minTxid]]: its `_txid` as
+    * the bigint the apply compares, a null as `Long.MinValue` (a null
+    * is no proof of newness, so it keeps the version gate). */
+  def txidFloor: Column = coalesce(col("_txid").cast(LongType), lit(Long.MinValue))
+}
+
 /** The MERGE-apply stage: one micro-batch of change events → one new
   * snapshot of the target [[LakeTable]].
   *
@@ -37,6 +51,13 @@ case class ApplyStats(
   *      duplication, or batch boundaries (exactly-once = idempotent
   *      keyed upsert; reference analogue: `_etag` change detection,
   *      /root/reference/lib/backup_state.js:135-143);
+  *      the gate reads the touched buckets' (key, _txid) only when the
+  *      batch could hold a stale event: every stored _txid is ≤ the
+  *      head commit's txidWatermark (each commit publishes the max of
+  *      its own and the head's), so a batch whose lowest _txid is
+  *      strictly above the watermark would pass every winner, and its
+  *      gate is skipped exactly. Late, replayed (lowest == watermark)
+  *      and null-_txid batches run the gate;
   *   4. merge — survivors (left-anti) ∪ effective events;
   *   5. salted repartition before the write so one hot conversation
   *      cannot serialize a whole bucket into one task (north-rule skew
@@ -181,7 +202,7 @@ object CdcApply {
       broadcastThreshold: Long = BroadcastMergeMaxEvents,
       maxDeltaDepth: Int = MaxDeltaDepth,
       foldRatio: Double = FoldToBaseRatio,
-      prunedHint: Option[(Seq[Int], Long)] = None): ApplyStats = {
+      hint: Option[BatchHint] = None): ApplyStats = {
     // env-gated phase timers (GRAFT_APPLY_DEBUG=1): decompose an
     // apply's wall into prune/plan/write/footers/commit — the
     // measurement tool behind the fixed-floor work (guide §1)
@@ -227,26 +248,19 @@ object CdcApply {
     val payload = evolveSchema(prevPayload, payloadIn, ignoreFields)
     val schema = storedSchema(payload)
 
-    // 1. bucket pruning + emptiness in ONE cheap job over the raw batch
-    // (every event's key appears among the winners, so the bucket set of
-    // the batch IS the bucket set of the winners — no window, no
-    // materialization, ≤ numBuckets values collected). For bulk replays
-    // that touch ~every bucket anyway (pruneBuckets=false) the pre-scan
-    // is pure overhead and skipped. Callers that already run an O(batch)
-    // aggregation of their own (the streaming tail's lineage/drift
-    // summary) pass the bucket set and count as `prunedHint`, folding
+    // 1. bucket pruning + emptiness + lowest _txid in ONE cheap job over
+    // the raw batch (every event's key appears among the winners, so the
+    // bucket set of the batch IS the bucket set of the winners — no
+    // window, no materialization, ≤ numBuckets values collected). For
+    // bulk replays that touch ~every bucket anyway (pruneBuckets=false)
+    // the pre-scan is pure overhead and skipped. Callers that already
+    // run an O(batch) aggregation of their own (the streaming tail's
+    // lineage/drift summary) pass its results as a `BatchHint`, folding
     // the pre-scan into that job — the steady-state micro-batch then
     // pays exactly ONE pass over the batch before the write.
-    var batchCount = -1L
-    val touched: Seq[Int] = prunedHint match {
-      case Some((buckets, n)) =>
-        batchCount = n
-        if (n == 0L)
-          return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-            skippedReplay = false, prevWm, 0)
-        buckets.sorted
-      case None if !pruneBuckets => 0 until table.effectiveNumBuckets
-      case None =>
+    val known: Option[BatchHint] = hint.orElse {
+      if (!pruneBuckets) None
+      else {
         // hash the CAST key — the winner tagging below hashes the key
         // cast to the stored type, and xxhash64 is type-directed, so an
         // uncast pre-scan (e.g. a batch whose conv_id inferred bigint
@@ -256,13 +270,22 @@ object CdcApply {
         val eAgg = events.agg(
           collect_set(table.bucketCol(
             col("conv_id").cast(schema("conv_id").dataType))).as("buckets"),
-          count(lit(1)).as("n")).head()
-        batchCount = eAgg.getAs[Long]("n")
-        if (batchCount == 0L)
-          return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
-            skippedReplay = false, prevWm, 0)
-        eAgg.getSeq[Int](0).sorted
+          count(lit(1)).as("n"),
+          min(BatchHint.txidFloor).as("minTx"))
+          .head()
+        Some(BatchHint(eAgg.getSeq[Int](0), eAgg.getLong(1),
+          if (eAgg.isNullAt(2)) Long.MinValue else eAgg.getLong(2)))
+      }
     }
+    if (known.exists(_.count == 0L))
+      return ApplyStats(prev.map(_.version).getOrElse(0L), 0, 0, 0,
+        skippedReplay = false, prevWm, 0)
+    val touched: Seq[Int] =
+      known.map(_.buckets.sorted).getOrElse(0 until table.effectiveNumBuckets)
+    val batchCount = known.map(_.count).getOrElse(-1L)
+    // the version gate can reject no winner when every event is newer
+    // than anything stored (see step 3 in the header)
+    val gateFree = prev.isEmpty || known.exists(_.minTxid > prevWm)
     mark("prune")
 
     // 2. latest event wins per key within the batch (§2.8 semantics) as
@@ -349,9 +372,10 @@ object CdcApply {
       val (nEff, nDeletes, maxTxRaw, deltaAdds, deltaReplaces) = if (broadcastPath) {
         // 4a. BROADCAST MERGE (steady-state CDC): the batch's keys are
         // small, so the TARGET side is never shuffled at all —
-        //   (i)  gate: target's (key, _txid) — a column-pruned narrow
-        //        scan — broadcast-joins the winner keys to find which
-        //        winners take effect (w._txid > stored _txid or new key);
+        //   (i)  gate (unless the batch is wholly above the watermark):
+        //        target's (key, _txid) — a column-pruned narrow scan —
+        //        broadcast-joins the winner keys to find which winners
+        //        take effect (w._txid > stored _txid or new key);
         //   (ii) merge: survivors = target LEFT ANTI broadcast(effective
         //        keys) — the full payload streams from the bucket files
         //        straight to the writer, zero exchanges —
@@ -367,11 +391,12 @@ object CdcApply {
         // the broadcast inner join prunes to the batch's keys FIRST, so
         // the per-key max-txid aggregation runs on ≤ |winners|·depth
         // rows instead of window-resolving the whole touched table.
-        // An EMPTY table has nothing to gate against — every winner
-        // takes effect, so the whole gate subtree (scan, broadcast,
-        // agg) is skipped rather than planned over an empty relation.
+        // An EMPTY table, or a batch wholly above the txid watermark,
+        // has nothing to gate against — every winner takes effect, so
+        // the whole gate subtree (second winner pass, key broadcast,
+        // scan, max-txid agg) is never planned.
         val effectivePlan =
-          if (prev.isEmpty) winnerRows
+          if (gateFree) winnerRows
           else {
             val rawKeys = align(table.readBuckets(spark, touched, resolve = false), schema)
               .select((mergeKeys :+ col("_txid").as("__t_txid")): _*)
@@ -433,10 +458,10 @@ object CdcApply {
             Map.empty[Int, (String, Long)], Map.empty[Int, (String, Long)])
         } else if (foldBuckets.isEmpty && consBuckets.isEmpty) {
           // 4a-i. PURE DELTA commit — the steady-state fast path: the
-          // gate, the effectiveness stats (Observation) and the write
-          // run as ONE job — no persist, no separate stats job; a
-          // micro-batch's fixed cost is the prune pre-scan plus this
-          // single write. Winners land as one small bucket-partitioned
+          // gate (when it runs), the effectiveness stats (Observation)
+          // and the write run as ONE job — no persist, no separate
+          // stats job; a micro-batch's fixed cost is the prune pre-scan
+          // plus this single write. Winners land as one small bucket-partitioned
           // parquet dir — O(batch) write regardless of table size. The
           // final exchange hash-partitions the winners BY BUCKET (an
           // O(batch) batch-side shuffle; explicit numPartitions so AQE
@@ -802,11 +827,13 @@ object CdcApply {
         // n ≤ 2×threshold guard caps at ~1M keys (tens of MB); and
         // the hint count is floored at the parallel-write threshold so
         // an under-estimate can never serialize a big delta through a
-        // single coalesced writer task.
+        // single coalesced writer task. The range's lower bound is a
+        // lower bound on its txids, so a batch above the watermark
+        // (every batch but the first of a fresh replay) skips the gate.
         applyBatch(spark, table,
           events.where(col("_txid") >= from && col("_txid") < to), batchId = -1L,
-          prunedHint = Some((0 until table.effectiveNumBuckets,
-            math.max(estBatch, ParallelDeltaWriteMinEvents))))
+          hint = Some(BatchHint(0 until table.effectiveNumBuckets,
+            math.max(estBatch, ParallelDeltaWriteMinEvents), from)))
       else
         applyBatch(spark, table,
           events.where(col("_txid") >= from && col("_txid") < to), batchId = -1L,

@@ -286,8 +286,8 @@ object CdcStream {
               // ONE pass over the batch: per-DC lineage counters, distinct
               // origin files, newest event time (ingest-lag input), novel
               // keys and corrupt rows (drift detection), PLUS the apply
-              // stage's bucket-prune inputs (touched-bucket set + clean
-              // row count over non-corrupt rows) — a single job that
+              // stage's BatchHint (touched-bucket set, clean row count and
+              // lowest _txid over non-corrupt rows) — a single job that
               // also materializes the cache every later job reads, so
               // applyBatch skips its own pre-scan entirely. hasTs reads
               // schemaCache at CALL time: a drift re-inference that
@@ -296,10 +296,11 @@ object CdcStream {
               def summarize(df: DataFrame) = {
                 val hasTs = schemaCache.fieldNames.contains("ts")
                 // cast before hashing: xxhash64 is type-directed, and
-                // this bucket set becomes applyBatch's prunedHint —
+                // this bucket set becomes applyBatch's hint —
                 // normalize() will cast conv_id to string before the
                 // apply hashes it, so the hint must hash the same value
-                val okBucket = when(col(CorruptCol).isNull,
+                val clean = col(CorruptCol).isNull
+                val okBucket = when(clean,
                   table.bucketCol(col("conv_id").cast("string")))
                 df.groupBy("_origin_dc").agg(
                   count(lit(1)).as("n"),
@@ -308,7 +309,8 @@ object CdcStream {
                    else lit(null).cast("long")).as("maxTs"),
                   sum(col(CorruptCol).isNotNull.cast("long")).as("nCorrupt"),
                   array_distinct(flatten(collect_set(col("__novel")))).as("novel"),
-                  collect_set(okBucket).as("buckets"))
+                  collect_set(okBucket).as("buckets"),
+                  min(when(clean, graft.cdc.BatchHint.txidFloor)).as("minTxid"))
                   .collect()
               }
               if (dbg) println("STREAMDBG plan:\n" +
@@ -363,8 +365,10 @@ object CdcStream {
               if (dbg) println(s"STREAMDBG batch=$batchId rows=" +
                 summary.map(_.getLong(1)).sum + s" clean=$nClean parts=" +
                 enriched.rdd.getNumPartitions)
-              val touchedBuckets = summary
-                .flatMap(_.getSeq[Int](6)).distinct.toSeq
+              val hint = graft.cdc.BatchHint(
+                summary.flatMap(_.getSeq[Int](6)).distinct.toSeq, nClean,
+                summary.filterNot(_.isNullAt(7)).map(_.getLong(7))
+                  .minOption.getOrElse(Long.MinValue))
               val events = normalize(enriched
                 .where(col(CorruptCol).isNull)
                 .drop(CorruptCol, "__novel"))
@@ -374,7 +378,7 @@ object CdcStream {
                   extraMetrics = lineage + ("originFiles" -> nFiles) ++
                     (if (nCorruptFinal > 0)
                       Map("corruptRows" -> nCorruptFinal) else Map.empty),
-                  prunedHint = Some((touchedBuckets, nClean))))
+                  hint = Some(hint)))
               val ms = (System.nanoTime() - t0) / 1000000
               // ingest lag: wall-clock minus newest event time in the batch
               // (north-star metric; negative/absent ts → no lag reading)

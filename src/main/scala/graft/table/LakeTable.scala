@@ -706,13 +706,18 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
       val p = spark.sessionState.conf.numShufflePartitions
       val salt = pmod(xxhash64(col("conv_id"), col("turn_idx")),
         lit(LakeTable.SaltBuckets.toLong))
+      // keys come from the GROUP-KEY attributes, not out of the max_by
+      // struct: a filter on them (a point lookup's conv_id = x) then
+      // pushes through the aggregate into the parquet scans instead of
+      // running after the bucket-wide resolve
       combined.withColumn("__bkt", bucketCol(col("conv_id")))
         .withColumn("__slt", salt)
         .repartition(p, col("__bkt"), col("__slt"))
         .groupBy((Seq(col("__bkt"), col("__slt")) ++ keys.map(col)): _*)
-        .agg(max_by(struct(allCols.map(col): _*),
+        .agg(max_by(struct(allCols.filterNot(keys.contains).map(col): _*),
           struct(col("_txid"), coalesce(col("_etag"), lit("")))).as("__m"))
-        .select(col("__m.*"))
+        .select(allCols.map(c =>
+          if (keys.contains(c)) col(c) else col("__m").getField(c).as(c)): _*)
     }
   }
 
@@ -898,8 +903,12 @@ class LakeTable(val location: String, val numBuckets: Int = 64) {
     val hook = testBeforePublish
     testBeforePublish = () => ()
     hook()
+    // the watermark must bound every stored _txid (CdcApply skips its
+    // version gate against it): a retry rebuilt on a head that a
+    // newer-txid writer published must not lower the head's watermark
+    val watermark = prev.fold(txidWatermark)(p => math.max(txidWatermark, p.txidWatermark))
     publish(Commit(
-      prev.map(_.version + 1).getOrElse(1L), batchId, txidWatermark, schema.json,
+      prev.map(_.version + 1).getOrElse(1L), batchId, watermark, schema.json,
       (carried -- dropped) ++ rewritten.collect { case (k, Some(v)) => k.toString -> v },
       counts, metrics + ("deletesSinceCompaction" -> delSince) +
         // persist the layout's bucket count forward; a caller-supplied

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.cdc.CdcApply
+import graft.cdc.{BatchHint, CdcApply}
 import graft.model.Corpus
 import graft.table.LakeTable
 
@@ -159,6 +159,89 @@ class CdcApplySpec extends SparkSpec {
     CdcApply.applyBatch(spark, table, ev(30, "update", "v30"))
     val rows = finalPayload(table).collect()
     assert(rows.length == 1 && rows.head.getAs[String]("text") == "v30")
+  }
+
+  /** One (conv_id, turn_idx) = (conv, 1) change event. */
+  private def keyEvent(txid: java.lang.Long, op: String, conv: String, text: String) = {
+    import spark.implicits._
+    val del = op == "delete"
+    Seq((txid, op, s"e$txid", conv, 1, if (del) null else "user",
+      if (del) null else text, null: String,
+      if (del) null else java.sql.Timestamp.valueOf("2014-03-11 00:00:01")))
+      .toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+  }
+
+  test("in-order batches skip the version gate with the gated path's rows, stats and metrics") {
+    val events = corpus(3000)
+    val skip = new LakeTable(tmpDir("gate-skip"), numBuckets = 16)
+    val gated = new LakeTable(tmpDir("gate-run"), numBuckets = 16)
+    Seq(skip, gated).foreach(t =>
+      CdcApply.applyBatch(spark, t, events.where(col("_txid") <= 1000)))
+    // batch 2 lands as a pure delta; batch 3 hits the depth cap of 1 and
+    // takes the fold/consolidate branch
+    Seq((1000L, 2000L), (2000L, 3000L)).foreach { case (lo, hi) =>
+      val batch = events.where(col("_txid") > lo && col("_txid") <= hi)
+      val (sSkip, wSkip) = withWritePlans(
+        CdcApply.applyBatch(spark, skip, batch, maxDeltaDepth = 1))
+      // the same batch with its lowest txid withheld must run the gate
+      val hint = BatchHint(
+        batch.select(gated.bucketCol(col("conv_id"))).distinct().collect()
+          .map(_.getInt(0)).toSeq, batch.count(), Long.MinValue)
+      val sGated = CdcApply.applyBatch(spark, gated, batch, maxDeltaDepth = 1,
+        hint = Some(hint))
+      assert(sSkip == sGated)
+      assert(skip.currentCommit().get.metrics == gated.currentCommit().get.metrics)
+      if (skip.currentCommit().get.metrics.contains("deltaCommit"))
+        wSkip.foreach(qe => assert(!scansUnder(qe, skip.location),
+          s"in-order delta write read the table:\n${qe.executedPlan}"))
+      assertSameRows(finalPayload(skip), finalPayload(gated))
+    }
+    val log = skip.commitLog()
+    assert(log.exists(_.metrics.contains("deltaCommit")) &&
+      log.exists(c => c.metrics.getOrElse("foldedBuckets", 0L) +
+        c.metrics.getOrElse("consolidatedBuckets", 0L) > 0L),
+      s"want a pure-delta and a fold/consolidate commit: ${log.map(_.metrics)}")
+    assertSameRows(finalPayload(skip), Corpus.oracleFinalState(events))
+  }
+
+  test("a late batch runs the gate: an update older than a stored delete stays dead") {
+    val table = new LakeTable(tmpDir("gate-late"), numBuckets = 4)
+    CdcApply.applyBatch(spark, table, keyEvent(10L, "update", "convX", "v10"))
+    CdcApply.applyBatch(spark, table, keyEvent(20L, "delete", "convX", ""))
+    // the stale update rides with a genuinely new key: the batch's
+    // highest txid is above the watermark, its lowest is not
+    val (s, wp) = withWritePlans(CdcApply.applyBatch(spark, table,
+      keyEvent(15L, "update", "convX", "v15-stale")
+        .unionByName(keyEvent(30L, "update", "convY", "v30"))))
+    assert(s.applied == 1 && table.txidWatermark == 30L)
+    assert(wp.exists(scansUnder(_, table.location)), "late batch skipped the gate")
+    val rows = finalPayload(table).collect()
+    assert(rows.map(_.getAs[String]("conv_id")).toSeq == Seq("convY"))
+  }
+
+  test("a re-applied batch (lowest txid == watermark) runs the gate and commits nothing") {
+    val events = corpus(1000)
+    val table = new LakeTable(tmpDir("gate-replay"), numBuckets = 8)
+    CdcApply.applyBatch(spark, table, events)
+    val wm = table.txidWatermark
+    val head = table.currentCommit().get.version
+    val s = CdcApply.applyBatch(spark, table, events.where(col("_txid") === wm))
+    assert(s.applied == 0 && s.txidWatermark == wm)
+    assert(table.currentCommit().get.version == head)
+    assertSameRows(finalPayload(table), Corpus.oracleFinalState(events))
+  }
+
+  test("a batch with a null _txid runs the gate") {
+    val table = new LakeTable(tmpDir("gate-null"), numBuckets = 4)
+    CdcApply.applyBatch(spark, table, keyEvent(10L, "update", "convX", "v10"))
+    // a null txid is no proof of newness: it may not replace convX
+    val s = CdcApply.applyBatch(spark, table,
+      keyEvent(null, "update", "convX", "no-txid")
+        .unionByName(keyEvent(30L, "update", "convY", "v30")))
+    assert(s.applied == 1)
+    val texts = finalPayload(table).collect()
+      .map(r => r.getAs[String]("conv_id") -> r.getAs[String]("text")).toMap
+    assert(texts == Map("convX" -> "v10", "convY" -> "v30"), s"got $texts")
   }
 
   test("delta, broadcast-rewrite and full-outer paths produce identical final state") {

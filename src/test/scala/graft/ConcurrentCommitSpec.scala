@@ -25,10 +25,11 @@ class ConcurrentCommitSpec extends SparkSpec {
   }
 
   /** Write a one-row delta dir for `bucket` under the given version
-    * name and return (relPath, rowCount, the row's conv_id, txid). */
+    * name, `txAhead` txids above the watermark, and return (relPath,
+    * rowCount, the row's conv_id, txid). */
   private def writeDelta(table: LakeTable, version: Long, bucket: Int,
-      newText: String): (String, Long, String, Long) = {
-    val tx = table.txidWatermark + 1
+      newText: String, txAhead: Long = 1L): (String, Long, String, Long) = {
+    val tx = table.txidWatermark + txAhead
     val row = table.readBuckets(spark, Seq(bucket))
       .orderBy("conv_id", "turn_idx").limit(1)
       .withColumn("_txid", lit(tx))
@@ -47,14 +48,18 @@ class ConcurrentCommitSpec extends SparkSpec {
     // writer B will land v0+1 inside A's publish window; A's retry
     // then lands v0+2 — dir names are version-aligned up front
     val b = new LakeTable(table.location, numBuckets = 8)
-    val (relB, nB, convB, txB) = writeDelta(b, v0 + 1, bucket = 2, "from-B")
+    // B carries the NEWER txid: A's retry must not publish its own,
+    // lower watermark over B's (the watermark bounds every stored txid)
+    val (relB, nB, convB, txB) = writeDelta(b, v0 + 1, bucket = 2, "from-B", txAhead = 50L)
     val (relA, nA, convA, txA) = writeDelta(table, v0 + 2, bucket = 5, "from-A")
+    assert(txB > txA)
     table.testBeforePublish = () =>
       b.commitDelta(schema, Map(2 -> (relB, nB)), txB, -1L, Map("writer" -> 2L))
     table.commitDelta(schema, Map(5 -> (relA, nA)), txA, -1L, Map("writer" -> 1L))
 
     val head = table.currentCommit().get
     assert(head.version == v0 + 2, s"expected both commits, head=$head")
+    assert(head.txidWatermark == txB, s"watermark went backwards: $head")
     assert(head.deltas("2") == Seq(relB.split("/").init.mkString("/")) ||
       head.deltas("2").head.startsWith(f"data/c${v0 + 1}%012dd"))
     assert(head.deltas("5").head.startsWith(f"data/c${v0 + 2}%012dd"))

@@ -1,9 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.table.LakeTable
 import graft.cdc.CdcApply
@@ -24,16 +25,6 @@ class PlanSpec extends SparkSpec {
     df.collect() // materialize so AQE finalizes the physical plan
     df.queryExecution.executedPlan.toString
   }
-
-  /** Expand through AQE plans and query stages (incl. Spark 4's
-    * ResultQueryStage): their inner plans are internal state, not
-    * children, so a plain .collect stops at them. */
-  private def flattenPlan(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => flattenPlan(a.executedPlan)
-    case s: QueryStageExec => flattenPlan(s.plan)
-    case r: ReusedExchangeExec => flattenPlan(r.child)
-    case other => other.children.flatMap(flattenPlan)
-  })
 
   test("q02 filter pushdown reaches the parquet scan") {
     val p = planOf("q02_filter_pushdown")
@@ -96,16 +87,6 @@ class PlanSpec extends SparkSpec {
     val table = new LakeTable(tmpDir("planbcast"), numBuckets = 16)
     val events = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
     CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 2000))
-    // capture every query execution during the incremental apply
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.add(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
-    }
     // the steady-state delta write is ONE job: it is allowed to contain
     // the O(batch) winner-collapse exchanges, but NO exchange may sit
     // above a scan of the TABLE's files — at 100 TB that is the line
@@ -114,7 +95,7 @@ class PlanSpec extends SparkSpec {
     def targetShuffles(p: org.apache.spark.sql.execution.SparkPlan,
         tableLoc: String): Seq[String] = {
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ShuffleQueryStageExec}
-      import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
       val root = p match {
         case a: AdaptiveSparkPlanExec => a.executedPlan
         case other => other
@@ -128,49 +109,61 @@ class PlanSpec extends SparkSpec {
             r.child.treeString.contains(tableLoc) => r.child.treeString
       }
     }
-    spark.listenerManager.register(listener)
-    try {
-      val s = CdcApply.applyBatch(spark, table, events.where(col("_txid") > 2000))
-      assert(s.applied > 0)
-      // listener delivery is async — poll for the write-job plan
-      import scala.jdk.CollectionConverters._
-      def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
-        val p = qe.executedPlan.toString
-        p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
-      }
-      var tries = 0
-      while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-      val wp = writePlans
-      assert(wp.nonEmpty, "no write-job plan captured")
-      wp.foreach { qe =>
-        // the write job must actually read the table (the gate scan)...
-        assert(qe.executedPlan.toString.contains(table.location) ||
-          wp.size > 1, s"write plan reads no table files:\n${qe.executedPlan}")
-        // ...but never through a shuffle
-        val bad = targetShuffles(qe.executedPlan, table.location)
-        assert(bad.isEmpty,
-          "table scan under a shuffle exchange in the delta write plan:\n" +
-            bad.headOption.getOrElse(""))
-      }
-      // and the steady write moves PAYLOAD through exactly one
-      // exchange — the batch's by-bucket hash (the winner groupBy,
-      // broadcast gate and writer all keep that layout). The only
-      // other exchange permitted is the gate's per-key max-txid
-      // aggregation, which is NARROW (merge keys + txid, no payload
-      // columns) and O(batch·depth) rows — every other shape (a
-      // writer repartition, a table-side shuffle) is a regression.
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      val shuffles = wp.flatMap(qe => flattenPlan(qe.executedPlan).distinct
-        .collect { case e: ShuffleExchangeExec => e })
-      val payloadShuffles = shuffles.filterNot(_.output.length <= 3)
-      assert(payloadShuffles.size == 1,
-        s"steady delta write has ${payloadShuffles.size} payload-bearing " +
-          s"exchanges (want exactly 1: the batch's by-bucket hash):\n" +
-          payloadShuffles.map(_.treeString.take(400)).mkString("\n"))
-      assert(payloadShuffles.head.outputPartitioning.toString.contains("__bkt"),
-        "the one payload exchange is not the by-bucket hash: " +
-          payloadShuffles.head.outputPartitioning.toString)
-    } finally spark.listenerManager.unregister(listener)
+    // one LATE event (txid 1, at or below the watermark) keeps the
+    // version gate in the plan: an all-newer batch skips it
+    val (s, wp) = withWritePlans(CdcApply.applyBatch(spark, table,
+      events.where(col("_txid") > 2000 || col("_txid") === 1)))
+    assert(s.applied > 0)
+    assert(wp.nonEmpty, "no write-job plan captured")
+    wp.foreach { qe =>
+      // the write job must actually read the table (the gate scan)...
+      assert(scansUnder(qe, table.location),
+        s"write plan reads no table files:\n${qe.executedPlan}")
+      // ...but never through a shuffle
+      val bad = targetShuffles(qe.executedPlan, table.location)
+      assert(bad.isEmpty,
+        "table scan under a shuffle exchange in the delta write plan:\n" +
+          bad.headOption.getOrElse(""))
+    }
+    // and the steady write moves PAYLOAD through exactly one
+    // exchange — the batch's by-bucket hash (the winner groupBy,
+    // broadcast gate and writer all keep that layout). The only
+    // other exchange permitted is the gate's per-key max-txid
+    // aggregation, which is NARROW (merge keys + txid, no payload
+    // columns) and O(batch·depth) rows — every other shape (a
+    // writer repartition, a table-side shuffle) is a regression.
+    val shuffles = wp.flatMap(qe => flattenPlan(qe.executedPlan).distinct
+      .collect { case e: ShuffleExchangeExec => e })
+    val payloadShuffles = shuffles.filterNot(_.output.length <= 3)
+    assert(payloadShuffles.size == 1,
+      s"steady delta write has ${payloadShuffles.size} payload-bearing " +
+        s"exchanges (want exactly 1: the batch's by-bucket hash):\n" +
+        payloadShuffles.map(_.treeString.take(400)).mkString("\n"))
+    assert(payloadShuffles.head.outputPartitioning.toString.contains("__bkt"),
+      "the one payload exchange is not the by-bucket hash: " +
+        payloadShuffles.head.outputPartitioning.toString)
+  }
+
+  test("in-order delta write reads no table file: the version gate is skipped") {
+    val table = new LakeTable(tmpDir("planskip"), numBuckets = 16)
+    val events = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
+    CdcApply.applyBatch(spark, table, events.where(col("_txid") <= 2000))
+    // every event is above the watermark: the gate could reject nothing
+    val (s, wp) = withWritePlans(
+      CdcApply.applyBatch(spark, table, events.where(col("_txid") > 2000)))
+    assert(s.applied > 0 && table.currentCommit().get.metrics("deltaCommit") == 1L)
+    assert(wp.nonEmpty, "no write-job plan captured")
+    wp.foreach { qe =>
+      assert(!scansUnder(qe, table.location),
+        s"in-order delta write scans the table:\n${qe.executedPlan}")
+    }
+    // the batch's by-bucket hash is the write's only exchange
+    val shuffles = wp.flatMap(qe => flattenPlan(qe.executedPlan).distinct
+      .collect { case e: ShuffleExchangeExec => e })
+    assert(shuffles.size == 1 &&
+      shuffles.head.outputPartitioning.toString.contains("__bkt"),
+      s"want exactly the by-bucket hash, got:\n" +
+        shuffles.map(_.treeString.take(400)).mkString("\n"))
   }
 
   test("consolidation write reads only delta stacks — never a base file") {
@@ -184,38 +177,45 @@ class PlanSpec extends SparkSpec {
         .toDF("_txid", "_op", "_etag", "conv_id", "turn_idx", "role", "text", "tool", "ts")
     CdcApply.applyBatch(spark, table, patch(100001), maxDeltaDepth = 2)
     CdcApply.applyBatch(spark, table, patch(100002), maxDeltaDepth = 2)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    // third patch hits the cap with a tiny stack → pure CONSOLIDATION
+    val (s, writePlans) = withWritePlans(
+      CdcApply.applyBatch(spark, table, patch(100003), maxDeltaDepth = 2))
+    assert(s.applied == 1)
+    val c = table.currentCommit().get
+    assert(c.metrics("consolidatedBuckets") == 1L && c.metrics("foldedBuckets") == 0L)
+    assert(writePlans.nonEmpty, "no write-job plan captured")
+    // base dirs are data/c<digits>/_bucket=N; delta dirs data/c<digits>d/...
+    val baseDir = raw"data/c\d+/_bucket".r
+    writePlans.foreach { qe =>
+      val p = qe.executedPlan.toString
+      assert(baseDir.findFirstIn(p).isEmpty,
+        s"consolidation write scans a BASE file (O(stack) promise broken):\n$p")
     }
-    spark.listenerManager.register(listener)
-    try {
-      // third patch hits the cap with a tiny stack → pure CONSOLIDATION
-      val s = CdcApply.applyBatch(spark, table, patch(100003), maxDeltaDepth = 2)
-      assert(s.applied == 1)
-      val c = table.currentCommit().get
-      assert(c.metrics("consolidatedBuckets") == 1L && c.metrics("foldedBuckets") == 0L)
-      import scala.jdk.CollectionConverters._
-      var tries = 0
-      def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
-        val p = qe.executedPlan.toString
-        p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
-      }
-      while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-      assert(writePlans.nonEmpty, "no write-job plan captured")
-      // base dirs are data/c<digits>/_bucket=N; delta dirs data/c<digits>d/...
-      val baseDir = raw"data/c\d+/_bucket".r
-      writePlans.foreach { qe =>
-        val p = qe.executedPlan.toString
-        assert(baseDir.findFirstIn(p).isEmpty,
-          s"consolidation write scans a BASE file (O(stack) promise broken):\n$p")
-      }
-    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("merge-on-read point lookup: the key filter reaches the parquet scans") {
+    // base + a delta per bucket, so the read resolves per key; the
+    // resolve projects the keys from its grouping attributes, so a
+    // conv_id predicate pushes below it into every scan
+    val table = new LakeTable(tmpDir("planmor"), numBuckets = 4)
+    val ev = Corpus.changeEvents(spark, 3000, nConvs = 50, maxTurns = 8)
+    CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 1500))
+    CdcApply.applyBatch(spark, table, ev.where(col("_txid") > 1500))
+    val c = table.currentCommit().get
+    assert(c.deltaDepth >= 1 && c.buckets.nonEmpty)
+    val key = table.read(spark).select("conv_id").head().getString(0)
+    val df = table.readBuckets(spark, 0 until 4).where(col("conv_id") === key)
+    val got = df.where(!coalesce(col("_deleted"), lit(false))).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    assertSameRows(got, Corpus.oracleFinalState(ev).where(col("conv_id") === key))
+    df.collect()
+    val scans = flattenPlan(df.queryExecution.executedPlan).collect {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size >= 2, s"want base and delta scans:\n${df.queryExecution.executedPlan}")
+    scans.foreach { sc =>
+      assert(sc.metadata.getOrElse("PushedFilters", "").contains("EqualTo(conv_id"),
+        s"key filter not pushed into ${sc.simpleString(400)}")
+    }
   }
 
   test("version-gate read scans only (merge keys, _txid) — pruning survives the base∪delta union") {
@@ -298,56 +298,36 @@ class PlanSpec extends SparkSpec {
     // interesting plan (non-empty target side)
     CdcApply.applyBatch(spark, table, ev.where(col("_txid") <= 3000),
       pruneBuckets = false)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    val (s, writePlans) = withWritePlans(CdcApply.applyBatch(spark, table,
+      ev.where(col("_txid") > 3000), pruneBuckets = false))
+    assert(s.applied > 0)
+    assert(writePlans.nonEmpty, "no write-job plan captured")
+    writePlans.foreach { qe =>
+      val nodes = flattenPlan(qe.executedPlan).distinct
+      val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 2,
+        s"bulk merge write has ${exchanges.size} exchanges (want 2 — " +
+          s"events + target, none above the join):\n${qe.executedPlan}")
+      // and the join must sit ABOVE both exchanges (merged output
+      // unshuffled): no exchange may contain a sort-merge join
+      val shuffledJoin = exchanges.exists(
+        e => flattenPlan(e).exists(_.nodeName.contains("SortMergeJoin")))
+      assert(!shuffledJoin,
+        s"merged join output re-shuffled:\n${qe.executedPlan}")
     }
-    spark.listenerManager.register(listener)
-    try {
-      val s = CdcApply.applyBatch(spark, table, ev.where(col("_txid") > 3000),
-        pruneBuckets = false)
-      assert(s.applied > 0)
-      import scala.jdk.CollectionConverters._
-      def writePlans = plans.iterator().asScala.toSeq.filter { qe =>
-        val p = qe.executedPlan.toString
-        p.contains("WriteFiles") || p.contains("InsertIntoHadoopFsRelation")
-      }
-      var tries = 0
-      while (writePlans.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-      assert(writePlans.nonEmpty, "no write-job plan captured")
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      writePlans.foreach { qe =>
-        val nodes = flattenPlan(qe.executedPlan).distinct
-        val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
-        assert(exchanges.size == 2,
-          s"bulk merge write has ${exchanges.size} exchanges (want 2 — " +
-            s"events + target, none above the join):\n${qe.executedPlan}")
-        // and the join must sit ABOVE both exchanges (merged output
-        // unshuffled): no exchange may contain a sort-merge join
-        val shuffledJoin = exchanges.exists(
-          e => flattenPlan(e).exists(_.nodeName.contains("SortMergeJoin")))
-        assert(!shuffledJoin,
-          s"merged join output re-shuffled:\n${qe.executedPlan}")
-      }
-      // files-per-bucket stays bounded by the salt width
-      val dataDir = java.nio.file.Paths.get(table.location, "data")
-      val bucketDirs = java.nio.file.Files.list(dataDir).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("c")).flatMap { c =>
-          java.nio.file.Files.list(c).iterator().asScala
-            .filter(_.getFileName.toString.startsWith("_bucket="))
-        }.toSeq
-      bucketDirs.foreach { b =>
-        val nFiles = java.nio.file.Files.list(b).iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet"))
-        assert(nFiles <= CdcApply.SaltBuckets,
-          s"bucket dir $b has $nFiles files (> salt width ${CdcApply.SaltBuckets})")
-      }
-    } finally spark.listenerManager.unregister(listener)
+    // files-per-bucket stays bounded by the salt width
+    val dataDir = java.nio.file.Paths.get(table.location, "data")
+    val bucketDirs = java.nio.file.Files.list(dataDir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("c")).flatMap { c =>
+        java.nio.file.Files.list(c).iterator().asScala
+          .filter(_.getFileName.toString.startsWith("_bucket="))
+      }.toSeq
+    bucketDirs.foreach { b =>
+      val nFiles = java.nio.file.Files.list(b).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      assert(nFiles <= CdcApply.SaltBuckets,
+        s"bucket dir $b has $nFiles files (> salt width ${CdcApply.SaltBuckets})")
+    }
   }
 
   test("text-analysis queries contain no UDFs (pure codegen expressions)") {
